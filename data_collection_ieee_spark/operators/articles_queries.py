@@ -8,7 +8,12 @@ quartile logic". Here they become what they were always going to be on
 an engine: DIMENSION LOOKUPS — a publisher→country dimension and a
 venue→quartile dimension applied to the merged silver articles table
 built by `sources.articles` (bronze JSON → silver typing → 11/9-column
-drift union). Because both dims are fixed literals they compile to
+drift union). The registered query reads the small bronze corpus that
+ships with the package (`data/articles/`, FIXTURES.md §A): IEEE and ACM
+records in the scrapers' own array-dump form, built so that every
+branch of both lookups carries rows. `enrich_dims` applies the same
+plan to any other IEEE/ACM dump lists, e.g. the reference's own
+scrape outputs. Because both dims are fixed literals they compile to
 in-row map lookups (the degenerate broadcast join); a data-driven dim
 table would broadcast-join exactly like operators/joins.py.
 
@@ -22,6 +27,8 @@ the fact side; the fact scan is a narrow projection.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -32,12 +39,11 @@ from data_collection_ieee_spark.sources.articles import (
     read_bronze_json,
 )
 
-REFERENCE_DATA = "/root/reference/data"
-IEEE_FILES = [f"{REFERENCE_DATA}/ai_articles.json", f"{REFERENCE_DATA}/blockchain_articles.json"]
-ACM_FILES = [
-    f"{REFERENCE_DATA}/acm_machine_learning_articles.json",
-    f"{REFERENCE_DATA}/acm_blockchain_articles.json",
-]
+CORPUS_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "data", "articles"
+)
+IEEE_FILES = [os.path.join(CORPUS_DIR, "ieee_articles.json")]
+ACM_FILES = [os.path.join(CORPUS_DIR, "acm_articles.json")]
 
 # publisher → country dimension (the realized `_extract_country`)
 PUBLISHER_COUNTRY = [
@@ -108,16 +114,13 @@ LEFT JOIN (VALUES {_sql_values(VENUE_QUARTILE)}) vd(venue, quartile)
 """
 
 
-@query("articles_enrich_dims", oracle=_ORACLE)
-def articles_enrich_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Merged IEEE+ACM silver articles, enriched by two dimension
-    lookups: publisher→country (reference main.py:173-180's
-    `_extract_country`, realized) and venue→quartile (main.py:182-185's
-    `_get_quartile`, realized). `sf_dir` is unused — this query runs on
-    the reference's own golden scrape dumps, the same files its
-    downstream consumers parse."""
-    ieee = bronze_to_silver(read_bronze_json(spark, IEEE_FILES, "ieee"))
-    acm = bronze_to_silver(read_bronze_json(spark, ACM_FILES, "acm"))
+def enrich_dims(spark: SparkSession, ieee_files, acm_files) -> DataFrame:
+    """Merged IEEE+ACM silver articles read from the given bronze JSON
+    dumps, enriched by two dimension lookups: publisher→country
+    (reference main.py:173-180's `_extract_country`, realized) and
+    venue→quartile (main.py:182-185's `_get_quartile`, realized)."""
+    ieee = bronze_to_silver(read_bronze_json(spark, ieee_files, "ieee"))
+    acm = bronze_to_silver(read_bronze_json(spark, acm_files, "acm"))
     merged = merge_sources(ieee, acm)
 
     # The dims are FIXED Python literals (6 and 17 entries), so the
@@ -143,3 +146,10 @@ def articles_enrich_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
         pub_map[publisher].alias("pays_dim"),
         ven_map[venue_key].alias("quartile_dim"),
     )
+
+
+@query("articles_enrich_dims", oracle=_ORACLE)
+def articles_enrich_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`enrich_dims` over the bronze corpus in `data/articles/`.
+    `sf_dir` is unused: the article records are not driver tables."""
+    return enrich_dims(spark, IEEE_FILES, ACM_FILES)

@@ -187,11 +187,16 @@ def test_json_array_export_size_guard(tmp_path, spark):
 
 def test_articles_enrich_dims_joins(spark):
     """A17 realized: both dimension joins enrich the merged table."""
-    from data_collection_ieee_spark.operators.articles_queries import (
-        articles_enrich_dims,
-    )
+    from data_collection_ieee_spark.operators.articles_queries import enrich_dims
 
-    df = articles_enrich_dims(spark, "").cache()
+    df = enrich_dims(
+        spark,
+        [f"{REF_DATA}/ai_articles.json", f"{REF_DATA}/blockchain_articles.json"],
+        [
+            f"{REF_DATA}/acm_machine_learning_articles.json",
+            f"{REF_DATA}/acm_blockchain_articles.json",
+        ],
+    ).cache()
     assert df.count() == 140
     # IEEE rows enrich via publisher→country, ACM rows via venue→quartile
     assert df.filter(F.col("pays_dim") == "United States").count() > 0

@@ -28,6 +28,20 @@ def test_query_matches_oracle(name, spark, duck, sf_dir):
         assert not problems, f"{name}: {problems}"
 
 
+def test_articles_corpus_exercises_both_lookups(spark, sf_dir):
+    """The parity check of articles_enrich_dims is only as strong as its
+    in-repo corpus: each lookup must both hit and miss on a present key,
+    and no ACM row (a date or "" publication) may get a country."""
+    rows = registry.QUERIES["articles_enrich_dims"](spark, sf_dir).collect()
+    for key, dim in (("publisher", "pays_dim"), ("venue_key", "quartile_dim")):
+        assert any(r[dim] is not None for r in rows), dim
+        assert any(r[key] is not None and r[dim] is None for r in rows), dim
+    assert any(r["indexation"] == "ACM" for r in rows)
+    assert not [
+        r for r in rows if r["indexation"] == "ACM" and r["pays_dim"] is not None
+    ]
+
+
 def test_bucketed_join_has_no_shuffle(spark, sf_dir):
     """The whole point of join_bucketed: bucket i joins bucket i with no
     Exchange on either join input (the only allowed Exchange is the
