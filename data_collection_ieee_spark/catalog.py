@@ -13,8 +13,6 @@ resolution here does.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -61,69 +59,6 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     if dtype == "timestamp_ntz":
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-# ---------------------------------------------------------------------------
-# iteration-discipline gate (OPTIMIZATION r13, guide §1.2/§2)
-#
-# The iterative kernels (PageRank, connected components, BFS, LPA) were
-# built with EAGER per-round localCheckpoints plus per-round bookkeeping
-# jobs — the campaign discipline that releases each round's shuffle
-# files before the next round starts (measured necessary at sf100,
-# where ten resident PageRank rounds overran a 76 GB local disk). That
-# discipline costs 1-3 driver-synchronized JOBS PER ROUND, which at
-# small inputs is almost the entire query latency (the data per round
-# is kilobytes; the job barriers are not). The honest, scale-adaptive
-# switch is INPUT SIZE — free driver-side metadata, the same signal a
-# production job would key deployment sizing from: below the threshold
-# the kernels keep the identical dataflow but checkpoint LAZILY
-# (plans stay O(1) via LogicalRDD; materialization folds into the next
-# action), above it they keep the eager+prompt-GC campaign discipline.
-# Results are bit-identical either way — only the action schedule moves.
-
-_EAGER_ITER_ENV = "SPARK_GRAFT_EAGER_ITER_BYTES"
-_EAGER_ITER_DEFAULT = 1_000_000_000  # ≥ ~sf10 inputs keep campaign discipline
-
-_INPUT_BYTES_CACHE: dict = {}
-
-
-def input_bytes(sf_dir: str) -> int:
-    """Total bytes of the scale-factor directory's inputs — pure
-    file-metadata (no Spark job). Memoized per directory; file sizes
-    are static for a given fixture. Walks RECURSIVELY (ADVICE r13):
-    a directory-style parquet dataset (standard multi-file Spark
-    output named foo.parquet/) has its bytes in nested part files —
-    a top-level glob would read the ~4 KB dir inode and silently
-    select the lazy schedule at campaign scale."""
-    if sf_dir not in _INPUT_BYTES_CACHE:
-        total = 0
-        for root, _dirs, files in os.walk(sf_dir):
-            for fn in files:
-                try:
-                    total += os.path.getsize(os.path.join(root, fn))
-                except OSError:
-                    pass  # racing file rotation — metadata only, best-effort
-        _INPUT_BYTES_CACHE[sf_dir] = total
-    return _INPUT_BYTES_CACHE[sf_dir]
-
-
-def eager_iterations(sf_dir: str) -> bool:
-    """True when the iterative kernels should keep the eager per-round
-    checkpoint + prompt-GC campaign discipline (large inputs, where a
-    round's shuffle is local-disk-relevant); False selects the lazy
-    schedule (same dataflow, fewer job barriers).
-
-    Fails CLOSED (ADVICE r13): the gate is a safety valve against the
-    sf100 local-disk overrun, so an unreadable/unknown layout
-    (input_bytes == 0) selects the EAGER schedule, not the lazy one."""
-    try:
-        threshold = int(os.environ.get(_EAGER_ITER_ENV, _EAGER_ITER_DEFAULT))
-    except ValueError:
-        threshold = _EAGER_ITER_DEFAULT
-    b = input_bytes(sf_dir)
-    if b <= 0:
-        return True
-    return b >= threshold
 
 
 # Reader-plan memo (OPTIMIZATION r14, guide §1.2 — the per-query fixed
@@ -264,6 +199,14 @@ def track_final_checkpoint(df: DataFrame) -> None:
 @on_release
 def _release_tracked_checkpoints() -> None:
     global _CKPT_FREE_FAILURES
+    cached: set = set()
+    if _CKPT_TRACKED:
+        try:
+            infos = _CKPT_TRACKED[0].context().getRDDStorageInfo()
+            cached = {info.id() for info in infos}
+        except Exception as exc:
+            _CKPT_FREE_FAILURES += 1
+            _log.debug("rdd storage info failed (%s): %s", type(exc).__name__, exc)
     for _jrdd in _CKPT_TRACKED:
         try:
             # Materialization guard (ADVICE r13): a LAZY localCheckpoint
@@ -272,9 +215,13 @@ def _release_tracked_checkpoints() -> None:
             # would clear its storage level so the DEFERRED
             # materialization hard-fails (missing checkpoint blocks)
             # instead of recomputing. Skip those — the ContextCleaner
-            # reclaims them when the frame is GC'd; materialized ones
-            # (isCheckpointed) free their blocks now.
-            if _jrdd.isCheckpointed():
+            # reclaims them when the frame is GC'd. Materialized ones
+            # free their blocks now: either isCheckpointed, or holding
+            # blocks without the flag — an RDD computed only inside a
+            # shuffle map stage (how AQE runs a lazy round that feeds
+            # the next round's exchange) stores its blocks but never
+            # reaches the job-end doCheckpoint that sets it.
+            if _jrdd.isCheckpointed() or _jrdd.id() in cached:
                 _jrdd.unpersist(False)
         except Exception as exc:
             _CKPT_FREE_FAILURES += 1

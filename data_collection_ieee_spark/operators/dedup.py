@@ -53,7 +53,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from data_collection_ieee_spark import catalog
 from data_collection_ieee_spark.catalog import load_table, on_release, persist_tracked
 from data_collection_ieee_spark.registry import query
 
@@ -1266,9 +1265,7 @@ def dedup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     pairs = dedup_ngram_jaccard(spark, sf_dir).select("a_id", "b_id")
     nodes = _shingles_df(spark, sf_dir).select("doc_id")
-    labels = connected_components(
-        spark, pairs, nodes, eager=catalog.eager_iterations(sf_dir)
-    )
+    labels = connected_components(spark, pairs, nodes)
     # cluster_size via aggregate + join, NOT count().over(partitionBy):
     # a WindowExec materializes each cluster in ONE task's memory — a
     # giant component at 100 TB would OOM that task. The aggregate is
@@ -1321,9 +1318,7 @@ def dedup_semantic_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes = load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("doc_id")
     )
-    labels = connected_components(
-        spark, pairs, nodes, eager=catalog.eager_iterations(sf_dir)
-    )
+    labels = connected_components(spark, pairs, nodes)
     sizes = labels.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
     return (
         labels.join(sizes, "cluster_id")
@@ -1360,7 +1355,6 @@ def connected_components(
     nodes: DataFrame,
     max_rounds: int = 15,
     hot_degree: int = HOT_DEGREE,
-    eager: bool = True,
 ) -> DataFrame:
     """Connected-component labels (min node id per component) over an
     undirected (a_id, b_id) pair list; returns (doc_id, cluster_id) for
@@ -1375,8 +1369,8 @@ def connected_components(
     40-node chain). Duplicate clusters are near-cliques (diameter
     1-2, converge in 2-3 rounds). Each round is one shuffle join, one
     aggregate, and one label self-join — fully distributed; the only
-    driver-side values are the has-hot-keys flag and the converged?
-    count.
+    driver-side values are the has-hot-keys flag and the round's
+    `changed` count.
 
     Hot-key hardening (round 5): the propagation join looks up
     labels[v] for every edge (u, v). A high-degree hub — the min-label
@@ -1397,10 +1391,14 @@ def connected_components(
     feeds the cold join, the hot broadcast, AND the merge union), so
     with persist alone the LOGICAL plan grows as ~3^rounds even though
     the data is cached — at graph diameter ≳10 the driver OOMs just
-    building plan strings, before one task runs. Every round therefore
-    goes through localCheckpoint(eager=True), which materializes the
-    same data persist did AND cuts the plan back to a LogicalRDD leaf:
-    plan size is O(1) per round at any diameter. On a cluster the same
+    building plan strings, before one task runs. Both halves of every
+    round therefore go through a lazy localCheckpoint, which cuts the
+    plan back to a LogicalRDD leaf: plan size is O(1) per round at any
+    diameter. The checkpoints are materialized by the round's one
+    `changed` count, the driver's convergence test; AQE also runs
+    each round's shuffle stages as jobs while producing the
+    checkpoints' RDDs, so a round is several jobs, not one. On a
+    cluster the same
     truncation would ride reliable checkpoint() against the checkpoint
     dir (executor loss can't recompute a localCheckpoint); the loop
     structure is unchanged either way."""
@@ -1470,16 +1468,11 @@ def connected_components(
                 F.min(F.when(F.col("_self"), F.col("cluster_id"))).alias("_old"),
             )
         )
-        # materializes the half-round AND truncates lineage (docstring
-        # above); also lets the self-join below read the aggregate once
-        # instead of recomputing it on both join sides.
-        # Small-input schedule (OPTIMIZATION r13, guide §1.2): below
-        # the caller's input gate (eager=False) the checkpoint is LAZY
-        # — the round's single `changed` count below materializes it
-        # together with `merged`, collapsing the round's three
-        # driver-synchronized jobs into one. Labels are identical (the
-        # min-label fixpoint is schedule-independent).
-        stepped = stepped.localCheckpoint(eager=eager)
+        # truncates lineage (docstring above); also lets the self-join
+        # below read the aggregate once instead of recomputing it on
+        # both join sides. Lazy: the round's `changed` count below
+        # materializes it together with `merged`.
+        stepped = stepped.localCheckpoint(eager=False)
         # Pointer jump (round-5 fix): edge propagation alone moves a
         # label ONE hop per round, so a component of diameter d needs d
         # rounds — a 40-node chain silently exceeded max_rounds and
@@ -1509,16 +1502,13 @@ def connected_components(
                 (F.col("_new") < F.col("_old")).alias("_changed"),
             )
         )
-        merged = merged.localCheckpoint(eager=eager)
-        if eager:
-            changed = merged.filter(F.col("_changed")).limit(1).count()
-        else:
-            # FULL count (no limit): a limit would take(1) a lazily
-            # checkpointed RDD — a partial materialization that leaves
-            # the rest of the checkpoint to recompute from truncated
-            # lineage. The full count is the round's one job and
-            # materializes merged (and stepped behind it) completely.
-            changed = merged.filter(F.col("_changed")).count()
+        merged = merged.localCheckpoint(eager=False)
+        # FULL count (no limit): a limit would take(1) a lazily
+        # checkpointed RDD — a partial materialization that leaves the
+        # rest of the checkpoint to recompute from truncated lineage.
+        # The full count materializes merged (and stepped behind it)
+        # completely.
+        changed = merged.filter(F.col("_changed")).count()
         # the checkpoints materialized the round, so the superseded
         # round's storage can go — keeps executor storage at ≤2 label
         # tables however many rounds convergence takes

@@ -37,11 +37,6 @@ _PR_TOPK = 20
 # leaving 8 guard digits under the 10^-9 output rounding
 _PR_SCALE = 10**17
 
-# prompt-GC shuffle cleanup pays only when a round's shuffle is
-# disk-relevant; below this edge count the ~0.5 s/collection is pure
-# tax (measured 10.6 → 18.8 s on the sf0.1 PageRank before gating)
-_GC_EDGE_THRESHOLD = 50_000_000
-
 
 def _purchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (customer, supplier) purchase edges, node ids
@@ -117,7 +112,6 @@ def pagerank(
     edges: DataFrame,
     iters: int = _PR_ITERS,
     damping: float = _DAMPING,
-    eager: bool = True,
 ) -> DataFrame:
     """Distributed PageRank on an undirected edge list (symmetrized
     internally): returns (node, rank_scaled, rank). Fixed iteration
@@ -141,88 +135,23 @@ def pagerank(
     rational damping. Quantization loses < (N+E)/10^17 of mass per
     round — ~10^-11 at sf0.1, invisible at the 10^-9 output rounding.
     Symmetrization removes dangling nodes by construction (every node
-    that appears has an outgoing edge). `localCheckpoint` per round
-    truncates lineage so the plan stays O(1) across iterations (the
-    CC-kernel lesson, dedup.py:1315)."""
-    # Stage the DISTINCT edge list to scratch parquet as its own job
-    # and release the build shuffles before anything else runs: the
-    # lineitem⋈orders + distinct pipeline holds ~20-40 GB of shuffle
-    # files at the 600M-edge scale, and letting it stay resident under
-    # the degree/repartition/cache stages below overran the local disk
-    # twice before this split (same staged-job device as the pair-pass
-    # campaign). The scratch file is the compact columnar edge table
-    # (~5 GB at sf100) a production deployment would materialize once
-    # per graph refresh anyway.
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
+    that appears has an outgoing edge). A lazy `localCheckpoint` per
+    round truncates lineage so the plan stays O(1) across iterations
+    (the CC-kernel lesson, dedup.py:1315).
 
-    spark = edges.sparkSession
-    if not eager:
-        # Small-input schedule (OPTIMIZATION r13, guide §1.2): the
-        # scratch-parquet staging job, the metadata count, and the
-        # per-round EAGER checkpoints exist to bound local disk at
-        # campaign scale (each is a driver-synchronized job). Below the
-        # input gate (catalog.eager_iterations) the identical dataflow
-        # runs off a tracked columnar persist with LAZY per-round
-        # checkpoints: every round still truncates lineage (plan stays
-        # O(1)), but materialization folds into the caller's single
-        # action. Ranks are bit-identical — integer fixed-point sums
-        # are order-independent, so only the job schedule moves.
-        from data_collection_ieee_spark.catalog import persist_tracked
+    Lifecycle: the edge list and the static edge side are tracked
+    persists and every round's checkpoint is tracked too, so
+    catalog.release_caches() frees them once the caller's action has
+    run; nothing here may be dropped earlier, because the lazy rounds
+    read it until then."""
+    from fractions import Fraction as _Fr
 
-        return _pagerank_rounds(
-            spark, persist_tracked(edges), iters, damping, eager=False
-        )
-    scratch = _os.path.join(
-        _tempfile.gettempdir(),
-        "dcis_graph_edges",
-        spark.sparkContext.applicationId,
+    from data_collection_ieee_spark.catalog import (
+        persist_tracked,
+        track_final_checkpoint,
     )
-    _shutil.rmtree(scratch, ignore_errors=True)
-    # NB: scratch lives under the DRIVER's tempdir, which reaches the
-    # executors only because driver and executors share a filesystem in
-    # local mode; a cluster deployment would point this at a shared
-    # scratch root (spark.local.dir-style setting or object store).
-    edges.write.mode("overwrite").parquet(scratch)
-    # try/finally so the scratch dir (GBs at sf100) and the static edge
-    # cache never leak when an iteration dies mid-loop (ADVICE r10)
-    try:
-        return _pagerank_rounds(spark, scratch, iters, damping)
-    finally:
-        _shutil.rmtree(scratch, ignore_errors=True)
 
-
-def _pagerank_rounds(
-    spark: SparkSession,
-    scratch,
-    iters: int,
-    damping: float,
-    eager: bool = True,
-) -> DataFrame:
-    """Iteration body of :func:`pagerank`. ``scratch`` is the staged
-    edge-list parquet path (eager/campaign mode — owns the static-edge
-    persist lifecycle, always unpersisted even on failure) or an
-    already-persisted edge DataFrame (lazy/small-input mode — caches are
-    tracked and released by catalog.release_caches(), and per-round
-    checkpoints are lazy so the caller's action runs the whole loop as
-    one job)."""
-    import gc as _gc
-
-    if eager:
-        staged = spark.read.parquet(scratch)
-        # row count from parquet metadata (no data scan): gates every
-        # prompt-GC below — a full JVM collection per round is ~0.5 s of
-        # pure tax on a small graph (measured 10.6 → 18.8 s at sf0.1)
-        # and only pays when a round's shuffle is disk-relevant
-        m_edges = staged.count()
-        big_graph = m_edges > _GC_EDGE_THRESHOLD
-    else:
-        staged = scratch  # persisted DataFrame, materialized on first use
-        big_graph = False
-    if big_graph:
-        _gc.collect()
-        spark._jvm.System.gc()  # drop the edge-build shuffle files NOW
+    staged = persist_tracked(edges)
     sym = staged.select(
         F.col("cust_node").alias("src"), F.col("supp_node").alias("dst")
     ).unionByName(
@@ -243,102 +172,45 @@ def _pagerank_rounds(
     # while the compressed columnar cache of three numeric columns is
     # a fraction of that and mostly stays in executor memory.
     deg = sym.groupBy("src").agg(F.count("*").alias("out_deg"))
-    edges_w = sym.join(deg, "src").select("src", "dst", "out_deg").repartition("src")
-    if eager:
-        edges_w = edges_w.persist()
-    else:
-        from data_collection_ieee_spark.catalog import persist_tracked
-
-        # released by catalog.release_caches(): the lazy rounds below
-        # still read this cache until the CALLER's action runs, so an
-        # unconditional unpersist-in-finally (the eager path's contract)
-        # would force a full edge rebuild per round
-        edges_w = persist_tracked(edges_w)
-    try:
-        if eager:
-            edges_w.count()  # materialize the static side eagerly, once
-        nodes = deg.select(F.col("src").alias("node")).localCheckpoint(
-            eager=eager
+    edges_w = persist_tracked(
+        sym.join(deg, "src").select("src", "dst", "out_deg").repartition("src")
+    )
+    nodes = deg.select(F.col("src").alias("node")).localCheckpoint(eager=False)
+    n = nodes.count()  # bounded scalar: node count (also materializes
+    # the nodes checkpoint — one job instead of two)
+    track_final_checkpoint(nodes)
+    # exact rational damping num/den (0.85 → 17/20); base term and
+    # the init rank are exact Python-int floors — no engine's
+    # decimal-division rounding is ever involved
+    num, den = _Fr(damping).limit_denominator(1_000_000).as_integer_ratio()
+    base = ((den - num) * _PR_SCALE) // (den * n)
+    ranks = nodes.select(
+        "node", F.lit(_PR_SCALE // n).cast("long").alias("rank_scaled")
+    )
+    damp_expr = (
+        f"{num}L * (coalesce(s, 0L) div {den}) + "
+        f"({num}L * (coalesce(s, 0L) % {den})) div {den}"
+    )
+    for _ in range(iters):
+        contrib = edges_w.join(
+            ranks, edges_w.src == ranks.node
+        ).select("dst", F.expr("rank_scaled div out_deg").alias("c"))
+        summed = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
+        ranks = nodes.join(
+            summed, nodes.node == summed.dst, "left"
+        ).select(
+            "node",
+            (F.lit(base).cast("long") + F.expr(damp_expr)).alias("rank_scaled"),
         )
-        n = nodes.count()  # bounded scalar: node count (materializes the
-        # lazy checkpoint too — one job instead of two in lazy mode)
-        # the edge-list BUILD (join + distinct over the raw fact
-        # tables) is tens of GB of now-dead shuffle at sf100 — release
-        # it before the iteration loop adds its own per-round footprint
-        if big_graph:
-            _gc.collect()
-            spark._jvm.System.gc()
-        # exact rational damping num/den (0.85 → 17/20); base term and
-        # the init rank are exact Python-int floors — no engine's
-        # decimal-division rounding is ever involved
-        from fractions import Fraction as _Fr
-
-        num, den = (
-            _Fr(damping).limit_denominator(1_000_000).as_integer_ratio()
-        )
-        base = ((den - num) * _PR_SCALE) // (den * n)
-        ranks = nodes.select(
-            "node", F.lit(_PR_SCALE // n).cast("long").alias("rank_scaled")
-        )
-        damp_expr = (
-            f"{num}L * (coalesce(s, 0L) div {den}) + "
-            f"({num}L * (coalesce(s, 0L) % {den})) div {den}"
-        )
-        _lazy_rounds = []
-        for _ in range(iters):
-            contrib = edges_w.join(
-                ranks, edges_w.src == ranks.node
-            ).select("dst", F.expr("rank_scaled div out_deg").alias("c"))
-            summed = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
-            ranks = nodes.join(
-                summed, nodes.node == summed.dst, "left"
-            ).select(
-                "node",
-                (F.lit(base).cast("long") + F.expr(damp_expr)).alias(
-                    "rank_scaled"
-                ),
-            )
-            # truncate lineage: without this the plan doubles per round.
-            # Lazy mode keeps the truncation (LogicalRDD leaf either
-            # way) but defers materialization to the caller's action —
-            # ten rounds collapse into one job
-            ranks = ranks.localCheckpoint(eager=eager)
-            if not eager:
-                _lazy_rounds.append(ranks)
-            # release the PREVIOUS round's shuffle files and checkpoint
-            # blocks NOW: lineage truncation makes them unreachable,
-            # but the ContextCleaner only drops them after a driver GC,
-            # so ten rounds of the |E|-row contrib shuffle otherwise
-            # stay resident simultaneously — measured filling a 76 GB
-            # local disk at sf100 (600M-edge graph, ~10 GB
-            # shuffle/round) before any cleanup fired. Same
-            # prompt-cleanup device as the pair-pass campaign
-            # (_run_pair_passes); on a cluster this is shuffle disk
-            # reclaimed per round instead of held for the whole job.
-            # Gated: pure tax when a round's shuffle is megabytes.
-            if big_graph:
-                _gc.collect()  # drop py4j refs to the prior round plan
-                spark._jvm.System.gc()
-    finally:
-        # the final ranks are checkpointed (no lineage into edges_w),
-        # so the static edge cache can be dropped deterministically —
-        # and MUST be even on failure: a bare persist() would otherwise
-        # sit in the CacheManager until session end, shadowing every
-        # later query's memory. Lazy mode MUST NOT drop it here (the
-        # unmaterialized rounds still read it); persist_tracked hands
-        # it to release_caches() instead.
-        if eager:
-            edges_w.unpersist()
-    if not eager:
-        # lazy checkpoints materialize at the caller's action and have
-        # no lineage afterwards; hand their storage to release_caches()
-        from data_collection_ieee_spark.catalog import (
-            track_final_checkpoint as _track_final_checkpoint,
-        )
-
-        _track_final_checkpoint(nodes)
-        for _ck in _lazy_rounds:
-            _track_final_checkpoint(_ck)
+        # truncate lineage: without this the plan doubles per round.
+        # The checkpoint is lazy, yet not free: AQE runs the round's
+        # shuffle stages as jobs while producing the checkpoint's RDD,
+        # so the rounds run here, in the caller's build phase
+        # (graph_pagerank's counts 50 jobs per benchmark pass).
+        # Shuffle files of superseded rounds are left to Spark's
+        # ContextCleaner.
+        ranks = ranks.localCheckpoint(eager=False)
+        track_final_checkpoint(ranks)
     # expose both the exact scaled rank (what the oracle compares /
     # the top-k orders by) and the double view consumers expect
     return ranks.select(
@@ -413,13 +285,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_round9_ops.py additionally pins the full rank vector
     against an independent numpy power iteration, plus the Σrank=1
     mass invariant."""
-    from data_collection_ieee_spark.catalog import eager_iterations
-
-    ranks = pagerank(
-        spark,
-        _purchase_edges(spark, sf_dir),
-        eager=eager_iterations(sf_dir),
-    )
+    ranks = pagerank(spark, _purchase_edges(spark, sf_dir))
     # distributed top-k: orderBy+limit compiles to TakeOrderedAndProject
     # (per-partition heads merged on one reducer) — a partitionless
     # row_number window over the full node table would single-thread
@@ -498,7 +364,7 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     visited/frontier frames are localCheckpoint-ed per round so the
     plan stays O(1) across hops (same lineage discipline as
     :func:`pagerank` and the CC kernel, dedup.py). The per-hop
-    ``isEmpty`` is a bounded driver scalar — the standard iterative-
+    frontier count is a bounded driver scalar — the standard iterative-
     dataflow convergence check. The oracle is a recursive CTE over
     (node, hop) pairs, which DuckDB bounds at V x hops rows; the
     Spark side never materializes that relation.
@@ -508,19 +374,14 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds on pathological chains, and capped-out nodes report -1
     exactly like the oracle's capped recursion.
     """
-    from data_collection_ieee_spark.catalog import eager_iterations
     from data_collection_ieee_spark.catalog import (
         track_final_checkpoint as _track_final_checkpoint,
     )
 
-    # Small-input schedule (OPTIMIZATION r13, guide §1.2): below the
-    # input gate every per-hop bookkeeping job (eager frontier/visited
-    # checkpoints, the cached-blocks isEmpty probe) folds into ONE
-    # full count per hop — the count doubles as the convergence check
-    # AND the materialization of the hop's lazy checkpoint. isEmpty()
-    # must NOT be used on a lazy checkpoint (it take(1)s, a partial
-    # materialization). Eager/campaign mode is unchanged.
-    eager = eager_iterations(sf_dir)
+    # Every checkpoint is lazy and tracked. One full count per hop is
+    # both the convergence check and the materialization of the hop's
+    # checkpoint; isEmpty() must NOT be used on a lazy checkpoint (it
+    # take(1)s, a partial materialization).
     edges = _purchase_edges(spark, sf_dir)
     sym = (
         edges.select(F.col("cust_node").alias("src"), F.col("supp_node").alias("dst"))
@@ -530,14 +391,9 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         .repartition("src")
-        .localCheckpoint(eager=eager)
+        .localCheckpoint(eager=False)
     )
-    if not eager:
-        _track_final_checkpoint(sym)
-    # cached-blocks scan, bounded: gates the per-hop prompt-GC below
-    # (below the input gate the scan count is skipped outright — the
-    # hub job materializes sym)
-    big_graph = eager and sym.count() > _GC_EDGE_THRESHOLD
+    _track_final_checkpoint(sym)
     hub = (
         sym.filter(F.col("src") % 2 == 1)
         .groupBy("src")
@@ -547,12 +403,9 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()  # bounded: exactly one row (the source node id)
     )[0]["src"]
     frontier = spark.createDataFrame([(hub,)], "node long").localCheckpoint(
-        eager=eager
+        eager=False
     )
-    if not eager:
-        # track the 1-row seed like nxt/visited (ADVICE r13: untracked,
-        # its blocks leaked until session end in long-lived sessions)
-        _track_final_checkpoint(frontier)
+    _track_final_checkpoint(frontier)
     visited = frontier.select("node", F.lit(0).alias("hop"))
     for hop in range(1, _BFS_MAX_HOPS + 1):
         nxt = (
@@ -560,31 +413,16 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
-            .localCheckpoint(eager=eager)
+            .localCheckpoint(eager=False)
         )
-        if eager:
-            if nxt.isEmpty():
-                break
-        else:
-            _track_final_checkpoint(nxt)
-            if nxt.count() == 0:  # full count: materializes the checkpoint
-                break
+        _track_final_checkpoint(nxt)
+        if nxt.count() == 0:  # full count: materializes the checkpoint
+            break
         visited = visited.unionByName(
             nxt.select("node", F.lit(hop).alias("hop"))
-        ).localCheckpoint(eager=eager)
-        if not eager:
-            _track_final_checkpoint(visited)
+        ).localCheckpoint(eager=False)
+        _track_final_checkpoint(visited)
         frontier = nxt
-        # prompt-release the previous hop's shuffle files + checkpoint
-        # blocks (see pagerank: lineage truncation alone leaves them
-        # for an eventual GC; at 600M edges each hop's join shuffle is
-        # ~10 GB of local disk held simultaneously otherwise). Gated
-        # on edge count like pagerank — pure tax on small graphs.
-        if big_graph:
-            import gc as _gc
-
-            _gc.collect()
-            spark._jvm.System.gc()
     nodes = sym.select(F.col("src").alias("node")).distinct()
     return (
         nodes.join(visited, "node", "left")
@@ -649,11 +487,6 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL(38,0) (exact, order-independent — hub degrees square into
     ~1e10 per term, far past safe float ULPs at 1e8+ edges).
     """
-    from data_collection_ieee_spark.catalog import (
-        eager_iterations,
-        persist_tracked,
-    )
-
     e0 = _purchase_edges(spark, sf_dir)
     edges = e0.select(
         F.col("cust_node").alias("src"), F.col("supp_node").alias("dst")
@@ -661,83 +494,28 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         e0.select(F.col("supp_node").alias("src"), F.col("cust_node").alias("dst"))
     )
     big = "decimal(38,0)"
-    if eager_iterations(sf_dir):
-        # Campaign-scale moments form (OPTIMIZATION r14, VERDICT r13 #6;
-        # guide §2.4): the xy formulation below expands the edge build
-        # into THREE duplicate subtrees (edges + two degree joins — the
-        # r13 before-plan showed 12 scans). On the symmetrized graph the
-        # per-edge endpoint-degree sums collapse onto the |V|-row degree
-        # table: n = Σd, sx = sy = Σd², sxx = syy = Σd³ (every directed
-        # edge contributes its src degree to x exactly once, and the
-        # graph's symmetry makes the y-marginals identical); only sxy
-        # needs edge context — ONE dst-side degree join, per-src sums,
-        # then a |V|-row multiply against the same degree table. All
-        # sums are exact integers in DECIMAL(38,0), associative and
-        # commutative, so the six scalars — and therefore the one
-        # output double — are bit-identical to the xy form (oracle- and
-        # equality-verified at sf0.01). Below the gate the xy form
-        # stays: at bench scale its duplicate subtrees run CONCURRENTLY
-        # inside one job on idle cores, while this form serializes the
-        # edge/degree materialization ahead of the main job (measured
-        # 1.26x worse at sf0.1 in r13) — strictly less WORK is not
-        # strictly less WALL-CLOCK until the cluster is saturated.
-        edges = persist_tracked(edges)
-        deg = persist_tracked(edges.groupBy("src").agg(F.count("*").alias("d")))
-        dd = F.col("d").cast("decimal(19,0)")
-        m1 = deg.groupBy().agg(
-            F.sum(F.col("d").cast(big)).cast("long").alias("n"),
-            F.sum((dd * F.col("d")).cast(big)).cast("double").alias("sx"),
-            F.sum((dd * F.col("d")).cast(big)).cast("double").alias("sy"),
-            F.sum((dd * F.col("d") * F.col("d")).cast(big))
-            .cast("double")
-            .alias("sxx"),
-            F.sum((dd * F.col("d") * F.col("d")).cast(big))
-            .cast("double")
-            .alias("syy"),
-        )
-        db = deg.select(F.col("src").alias("t"), F.col("d").alias("y"))
-        per_src = (
-            edges.join(db, edges.dst == F.col("t"))
-            .groupBy("src")
-            .agg(F.sum(F.col("y").cast(big)).alias("sy_u"))
-        )
-        sxy = (
-            per_src.join(deg, "src")
-            .groupBy()
-            .agg(
-                F.sum(
-                    (F.col("d").cast("decimal(19,0)") * F.col("sy_u")).cast(big)
-                )
-                .cast("double")
-                .alias("sxy")
-            )
-        )
-        m = m1.crossJoin(F.broadcast(sxy)).select(
-            "n", "sx", "sy", "sxy", "sxx", "syy"
-        )
-    else:
-        deg = edges.groupBy("src").agg(F.count("*").alias("d"))
-        da = deg.select(F.col("src").alias("s"), F.col("d").alias("x"))
-        db = deg.select(F.col("src").alias("t"), F.col("d").alias("y"))
-        xy = (
-            edges.join(da, edges.src == da.s)
-            .join(db, edges.dst == db.t)
-            .select("x", "y")
-        )
-        m = xy.groupBy().agg(
-            F.count("*").cast("long").alias("n"),
-            F.sum(F.col("x").cast(big)).cast("double").alias("sx"),
-            F.sum(F.col("y").cast(big)).cast("double").alias("sy"),
-            F.sum((F.col("x").cast("decimal(19,0)") * F.col("y")).cast(big))
-            .cast("double")
-            .alias("sxy"),
-            F.sum((F.col("x").cast("decimal(19,0)") * F.col("x")).cast(big))
-            .cast("double")
-            .alias("sxx"),
-            F.sum((F.col("y").cast("decimal(19,0)") * F.col("y")).cast(big))
-            .cast("double")
-            .alias("syy"),
-        )
+    deg = edges.groupBy("src").agg(F.count("*").alias("d"))
+    da = deg.select(F.col("src").alias("s"), F.col("d").alias("x"))
+    db = deg.select(F.col("src").alias("t"), F.col("d").alias("y"))
+    xy = (
+        edges.join(da, edges.src == da.s)
+        .join(db, edges.dst == db.t)
+        .select("x", "y")
+    )
+    m = xy.groupBy().agg(
+        F.count("*").cast("long").alias("n"),
+        F.sum(F.col("x").cast(big)).cast("double").alias("sx"),
+        F.sum(F.col("y").cast(big)).cast("double").alias("sy"),
+        F.sum((F.col("x").cast("decimal(19,0)") * F.col("y")).cast(big))
+        .cast("double")
+        .alias("sxy"),
+        F.sum((F.col("x").cast("decimal(19,0)") * F.col("x")).cast(big))
+        .cast("double")
+        .alias("sxx"),
+        F.sum((F.col("y").cast("decimal(19,0)") * F.col("y")).cast(big))
+        .cast("double")
+        .alias("syy"),
+    )
     nd = F.col("n").cast("double")
     num = nd * F.col("sxy") - F.col("sx") * F.col("sy")
     den = F.sqrt(nd * F.col("sxx") - F.col("sx") * F.col("sx")) * F.sqrt(
@@ -1347,11 +1125,7 @@ def graph_connected_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionAll(pairs.select(F.col("b_id").alias("doc_id")))
         .distinct()
     )
-    from data_collection_ieee_spark.catalog import eager_iterations
-
-    comp = connected_components(
-        spark, pairs, nodes, eager=eager_iterations(sf_dir)
-    )
+    comp = connected_components(spark, pairs, nodes)
     w = Window.partitionBy("cluster_id")
     return comp.select(
         F.col("doc_id").alias("custkey"),
@@ -1421,19 +1195,15 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     and `_LPA_ROUNDS` bounds latency like `graph_pagerank`'s fixed
     iteration count."""
     from data_collection_ieee_spark.catalog import (
-        eager_iterations,
         persist_tracked,
-    )
-    from data_collection_ieee_spark.catalog import (
         track_final_checkpoint as _track_final_checkpoint,
     )
 
-    # Small-input schedule (OPTIMIZATION r13, guide §1.2): per-round
-    # checkpoints stay (lineage truncation) but turn lazy below the
-    # input gate, so the four rounds run as one job at the caller's
-    # action instead of four driver-synchronized eager jobs. Labels are
-    # identical — the argmax is an exact max-of-struct.
-    eager = eager_iterations(sf_dir)
+    # Per-round checkpoints are lazy (lineage truncation only), yet the
+    # rounds do not wait for the caller's action: AQE runs each round's
+    # shuffle stages as jobs while producing the checkpoint's RDD, so
+    # they run here in the build phase (graph_label_propagation's build
+    # phase counts 29 jobs per benchmark pass).
     pairs = _affinity_edge_list(spark, sf_dir)
     sym = persist_tracked(
         pairs.select(F.col("a_id").alias("u"), F.col("b_id").alias("v"))
@@ -1462,10 +1232,9 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("m")
             )
             .select(F.col("u").alias("node"), F.col("m.nl").alias("l"))
-            .localCheckpoint(eager=eager)
+            .localCheckpoint(eager=False)
         )
-        if not eager:
-            _track_final_checkpoint(labels)
+        _track_final_checkpoint(labels)
     sizes = labels.groupBy("l").agg(F.count("*").alias("community_size"))
     return labels.join(sizes, "l").select(
         F.col("node").alias("custkey"),

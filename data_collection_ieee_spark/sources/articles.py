@@ -58,6 +58,15 @@ ACM_BRONZE_SCHEMA = T.StructType(
 #   ACM:  "https://doi.org/10.1145/3688225.3688241"
 DOI_PATTERN = r"(10\.\d{4,9}/[^\s]+)"
 
+# What "trimmed" strips: the Unicode space separators (category Zs),
+# the set DuckDB's trim() strips. F.trim alone strips only U+0020, and
+# a scraped '\xa0Publisher: IEEE\xa0' must still hit the publisher
+# lookup. Tabs, newlines, U+0085 and U+200B are kept, as in DuckDB.
+SPACE_SEPARATORS = (
+    "\u0020\u00a0\u1680\u2000\u2001\u2002\u2003\u2004\u2005\u2006"
+    "\u2007\u2008\u2009\u200a\u202f\u205f\u3000"
+)
+
 
 def read_bronze_json(spark: SparkSession, path, source: str) -> DataFrame:
     """Read one or more scraper JSON dumps (array-of-objects, as the
@@ -110,7 +119,8 @@ def read_bronze_csv(spark: SparkSession, path: str, source: str) -> DataFrame:
 def bronze_to_silver(bronze: DataFrame) -> DataFrame:
     """The "" → NULL + typing rule (SURVEY.md §4 item 5).
 
-    Every string column is trimmed and ''-nullified; then:
+    Every string column is trimmed of `SPACE_SEPARATORS` and
+    ''-nullified; then:
     - `doi_canonical`: bare DOI extracted from either encoding;
     - `auteurs`: chercheurs split on '; ' into array<string>;
     - `pub_date`: publication parsed as a date where it is one (the
@@ -128,7 +138,7 @@ def bronze_to_silver(bronze: DataFrame) -> DataFrame:
     present = set(bronze.columns)
     silver = {
         c: (
-            F.nullif(F.trim(F.col(c)), F.lit(""))
+            F.nullif(F.btrim(F.col(c), F.lit(SPACE_SEPARATORS)), F.lit(""))
             if c in present
             else F.lit(None).cast("string")
         )

@@ -3,8 +3,6 @@
 Every change this round is schedule/plan-shape only — results must be
 bit-identical. These tests pin the equalities the optimizations rely on:
 
-- graph_assortativity now forks on the iteration gate (moments form at
-  campaign scale, xy form below it); both forms must agree to the bit.
 - catalog.load_table memoizes the READER PLAN per (session, sf_dir,
   table) — a plan handle, never data; the memo must be keyed by live
   session and must not leak across scale-factor dirs.
@@ -15,8 +13,6 @@ bit-identical. These tests pin the equalities the optimizations rely on:
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
 from data_collection_ieee_spark import catalog, registry
@@ -24,23 +20,6 @@ from data_collection_ieee_spark import catalog, registry
 registry.load_all()
 
 SF_A = "/root/testdata/sf0.001"
-
-
-def test_assortativity_moments_form_bit_equal(spark):
-    """The eager-gate moments restructure (one edge join + degree-table
-    moments) must reproduce the xy form's output EXACTLY — same exact
-    integer multiset sums, same final double."""
-    fn = registry.QUERIES["graph_assortativity"]
-    os.environ["SPARK_GRAFT_EAGER_ITER_BYTES"] = "0"  # force moments form
-    try:
-        eager_rows = fn(spark, SF_A).collect()
-    finally:
-        os.environ.pop("SPARK_GRAFT_EAGER_ITER_BYTES", None)
-    catalog.release_caches()
-    lazy_rows = fn(spark, SF_A).collect()
-    catalog.release_caches()
-    assert eager_rows == lazy_rows
-    assert len(eager_rows) == 1 and eager_rows[0]["n_directed_edges"] > 0
 
 
 def test_load_table_memoizes_reader_plan_per_session(spark):
@@ -77,19 +56,21 @@ def test_cc_kernel_releases_pair_cache(spark):
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == base
 
 
-@pytest.mark.parametrize("eager", [True, False])
-def test_cc_labels_identical_under_pair_persist(spark, eager):
+@pytest.mark.parametrize("swap", [True, False])
+def test_cc_labels_identical_under_pair_persist(spark, swap):
     """The pair persist is schedule-only: labels must match a driver
-    union-find regardless of schedule."""
+    union-find whichever way round each pair is written (pairs are
+    undirected)."""
     from data_collection_ieee_spark.operators.dedup import connected_components
 
     edges = [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (3, 10)]
     nodes_l = [1, 2, 3, 10, 11, 20, 21, 22, 30]
-    pairs = spark.createDataFrame(edges, "a_id bigint, b_id bigint")
+    rows = [(b, a) for a, b in edges] if swap else edges
+    pairs = spark.createDataFrame(rows, "a_id bigint, b_id bigint")
     nodes = spark.createDataFrame([(i,) for i in nodes_l], "doc_id bigint")
     got = {
         r["doc_id"]: r["cluster_id"]
-        for r in connected_components(spark, pairs, nodes, eager=eager).collect()
+        for r in connected_components(spark, pairs, nodes).collect()
     }
     # reference union-find
     parent = {n: n for n in nodes_l}
