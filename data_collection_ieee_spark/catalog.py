@@ -71,8 +71,11 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
 # reusing it still computes everything from the parquet inputs; this is
 # the same class of metadata reuse as Spark's own session-level
 # FileStatusCache. Keyed by the live session object so a restarted
-# session can never serve stale py4j handles. Deliberately NOT cleared
-# by release_caches(): there is nothing cached to release.
+# session can never serve stale py4j handles, and holds one session's
+# plans at a time: the first miss under a new session drops every
+# other session's entries, so a stopped session is not pinned for the
+# life of the process. Deliberately NOT cleared by release_caches():
+# there is nothing cached to release.
 _TABLE_CACHE: dict = {}
 
 
@@ -88,6 +91,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     key = (spark, sf_dir, name)
     df = _TABLE_CACHE.get(key)
     if df is None:
+        for stale in [k for k in _TABLE_CACHE if k[0] is not spark]:
+            del _TABLE_CACHE[stale]
         path = f"{sf_dir}/{name}.parquet"
         if name == "events":
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

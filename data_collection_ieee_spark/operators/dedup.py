@@ -246,121 +246,6 @@ def _prefix_candidates(postings: DataFrame, sizes: DataFrame, df_tbl: DataFrame)
     )
 
 
-# ---------------------------------------------------------------------------
-# bounded-spill pass decomposition (round 9)
-#
-# The shingle count-join family's shuffle volume is Σ_shingle df² —
-# at sf100 on this host that exceeds the single local disk (the
-# BASELINE.md "disk ceiling" negative). On a real cluster the same
-# wall exists whenever a campaign's shuffle exceeds aggregate shuffle
-# disk; the standard move is a SHARDED CAMPAIGN: partition the pair
-# space, run one bounded shuffle per shard, union the shard outputs.
-# Pairs are sharded by the SMALLER document's id hash (the a-side of
-# the a_id < b_id canonical order), so every pair lands in exactly one
-# pass and no cross-pass merge is ever needed — each pass's
-# threshold-filtered output is final. Cost: the b-side postings are
-# re-shuffled once per pass (K × a linear term) to cut the quadratic
-# pair-mass spill to ~1/K per pass. Passes run as separate jobs with
-# shuffle-file cleanup between, materialized to scratch parquet; the
-# operator returns the lazy union read, so the default single-pass
-# plan (SPARK_GRAFT_PAIR_PASSES unset or 1) is byte-identical to
-# before.
-
-PAIR_PASSES_ENV = "SPARK_GRAFT_PAIR_PASSES"
-
-# per-label stats of the last sharded run: [{pass, wall_s,
-# scratch_bytes, local_dir_bytes}] — the scale-trend runner records
-# these next to the decade entry. Deliberately NOT cleared by
-# release_caches(): it is run metadata, not a cached frame, and the
-# trend harness reads it after its final cache release.
-PASS_STATS: dict[str, list[dict]] = {}
-
-
-def _n_pair_passes() -> int:
-    import os
-
-    try:
-        return max(1, int(os.environ.get(PAIR_PASSES_ENV, "1")))
-    except ValueError:
-        return 1
-
-
-def _a_bucket_pred(col: str, bucket: tuple[int, int]):
-    """Pass predicate: pair rows whose smaller-side doc hashes into
-    bucket k of n. xxhash64 balances any id distribution; pmod keeps
-    the negative half of the hash space in range."""
-    k, n = bucket
-    return F.pmod(F.xxhash64(F.col(col)), F.lit(n)) == F.lit(k)
-
-
-def _local_dir_bytes() -> int:
-    """Total bytes under the Spark local dirs (blockmgr shuffle/spill
-    files) — the quantity the disk ceiling is measured in."""
-    import glob
-    import os
-
-    total = 0
-    for root in glob.glob(os.path.join("/tmp", "blockmgr-*")):
-        for dirpath, _dirnames, filenames in os.walk(root):
-            for f in filenames:
-                try:
-                    total += os.path.getsize(os.path.join(dirpath, f))
-                except OSError:
-                    pass
-    return total
-
-
-def _run_pair_passes(spark: SparkSession, label: str, n_passes, build_pass) -> DataFrame:
-    """Run ``build_pass(k)`` for each pair-space shard as its own job,
-    materializing each shard's (small, already-thresholded) output to
-    scratch parquet and releasing the shard's shuffle files before the
-    next one starts; return the lazy union read. On a cluster this is
-    one submitted job per shard against the same warehouse scratch
-    path — the bounded-spill campaign pattern, not a bench workaround."""
-    import os
-    import shutil
-    import tempfile
-    import time
-
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "dcis_pair_passes",
-        f"{spark.sparkContext.applicationId}_{label}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
-    stats: list[dict] = []
-    schema = None
-    for k in range(n_passes):
-        t0 = time.time()
-        df = build_pass(k)
-        if schema is None:
-            schema = df.schema
-        df.write.mode("overwrite").parquet(os.path.join(root, f"k{k}"))
-        # drop this pass's shuffle files before the next pass shuffles:
-        # the ContextCleaner removes them once the JVM-side plan objects
-        # are unreachable, which a GC makes prompt instead of eventual
-        spark._jvm.System.gc()
-        scratch = sum(
-            os.path.getsize(os.path.join(dp, f))
-            for dp, _dn, fns in os.walk(root)
-            for f in fns
-        )
-        stats.append(
-            {
-                "pass": k,
-                "wall_s": round(time.time() - t0, 3),
-                "scratch_bytes": scratch,
-                "local_dir_bytes": _local_dir_bytes(),
-            }
-        )
-    PASS_STATS[label] = stats
-    return (
-        spark.read.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(root)
-    )
-
-
 # max-df per shingle frame, memoized so repeat callers (e.g.
 # dedup_cluster_assign → dedup_ngram_jaccard) pay the 1-row decision
 # job once per session; cleared with the other caches
@@ -372,16 +257,12 @@ def _jaccard_pairs(
     spark: SparkSession,
     sh: DataFrame,
     force_prefix: bool | None = None,
-    a_bucket: tuple[int, int] | None = None,
 ) -> DataFrame:
     """Exact Jaccard ≥ τ pairs over a (doc_id, hs) shingle frame, with
     adaptive candidate generation (see dedup_ngram_jaccard docstring).
     `force_prefix` pins the path for tests; None = decide from max df
     (one 1-row metadata collect over the df aggregate, memoized per
-    shingle frame). ``a_bucket=(k, n)`` restricts output to pairs whose
-    smaller-side doc hashes into shard k of n (the bounded-spill pass
-    decomposition — lossless because a_id < b_id makes the smaller side
-    a function of the pair)."""
+    shingle frame)."""
     postings = sh.select("doc_id", F.explode("hs").alias("h"))
     sizes = sh.select("doc_id", F.size("hs").alias("n"))
 
@@ -397,8 +278,6 @@ def _jaccard_pairs(
 
     if use_prefix:
         cand = _prefix_candidates(postings, sizes, df_tbl)
-        if a_bucket is not None:
-            cand = cand.filter(_a_bucket_pred("a_id", a_bucket))
         # count-join VERIFICATION restricted to candidates: one row per
         # shared shingle of each candidate pair — cost ∝ candidate
         # postings, all codegen, no interpreted array intersections.
@@ -411,12 +290,7 @@ def _jaccard_pairs(
             .agg(F.count("*").alias("inter"))
         )
     else:
-        a_postings = (
-            postings.filter(_a_bucket_pred("doc_id", a_bucket))
-            if a_bucket is not None
-            else postings
-        )
-        a = a_postings.select(F.col("doc_id").alias("a_id"), "h")
+        a = postings.select(F.col("doc_id").alias("a_id"), "h")
         b = postings.select(F.col("doc_id").alias("b_id"), "h")
         inter = (
             a.join(b, "h")
@@ -453,23 +327,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
       then the SAME count-join, restricted to candidates. Either path
       feeds the identical integer filter, so results are identical by
       construction (tests/test_llm_ops.py proves path equality on a
-      crafted high-df fixture and that the candidate count collapses).
-
-    Bounded-spill campaign mode (SPARK_GRAFT_PAIR_PASSES=K > 1): the
-    pair space is sharded by the smaller doc's id hash and each shard
-    runs as its own job (see _run_pair_passes) — the move when the
-    Σ df² shuffle exceeds per-node disk; output provably equal to the
-    single-pass form (pytest)."""
-    sh = _shingles_df(spark, sf_dir)
-    n_passes = _n_pair_passes()
-    if n_passes == 1:
-        return _jaccard_pairs(spark, sh)
-    return _run_pair_passes(
-        spark,
-        "ngram_jaccard",
-        n_passes,
-        lambda k: _jaccard_pairs(spark, sh, a_bucket=(k, n_passes)),
-    )
+      crafted high-df fixture and that the candidate count collapses)."""
+    return _jaccard_pairs(spark, _shingles_df(spark, sf_dir))
 
 
 _N_HASHES = 128
@@ -602,55 +461,25 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`sample_stratified` is the companion operator) — calibration
     needs distribution shape, not the full census."""
     sh = _shingles_df(spark, sf_dir)
-
-    def hist_shard(a_bucket: tuple[int, int] | None) -> DataFrame:
-        postings = sh.select(
-            "doc_id", F.size("hs").alias("n"), F.explode("hs").alias("h")
+    postings = sh.select("doc_id", F.size("hs").alias("n"), F.explode("hs").alias("h"))
+    a = postings.select(F.col("doc_id").alias("a_id"), F.col("n").alias("n_a"), "h")
+    b = postings.select(F.col("doc_id").alias("b_id"), F.col("n").alias("n_b"), "h")
+    hist = (
+        a.join(b, "h")
+        .filter(F.col("a_id") < F.col("b_id"))
+        .groupBy("a_id", "b_id")
+        .agg(
+            F.count("*").alias("inter"),
+            # n_a/n_b are functionally determined by a_id/b_id; min is a
+            # deterministic pick that rides the same map-side combine
+            F.min("n_a").alias("n_a"),
+            F.min("n_b").alias("n_b"),
         )
-        a_postings = (
-            postings.filter(_a_bucket_pred("doc_id", a_bucket))
-            if a_bucket is not None
-            else postings
-        )
-        a = a_postings.select(
-            F.col("doc_id").alias("a_id"), F.col("n").alias("n_a"), "h"
-        )
-        b = postings.select(
-            F.col("doc_id").alias("b_id"), F.col("n").alias("n_b"), "h"
-        )
-        return (
-            a.join(b, "h")
-            .filter(F.col("a_id") < F.col("b_id"))
-            .groupBy("a_id", "b_id")
-            .agg(
-                F.count("*").alias("inter"),
-                # n_a/n_b are functionally determined by a_id/b_id; min is a
-                # deterministic pick that rides the same map-side combine
-                F.min("n_a").alias("n_a"),
-                F.min("n_b").alias("n_b"),
-            )
-            .withColumn("uni", F.col("n_a") + F.col("n_b") - F.col("inter"))
-            .select(F.expr("CAST((10 * inter) DIV uni AS INT)").alias("jaccard_bucket"))
-            .groupBy("jaccard_bucket")
-            .agg(F.count("*").alias("n_pairs"))
-        )
-
-    n_passes = _n_pair_passes()
-    if n_passes == 1:
-        hist = hist_shard(None)
-    else:
-        # per-shard 11-row histograms sum exactly: each pair is counted
-        # in precisely one shard (sharded by its smaller doc's id hash)
-        hist = (
-            _run_pair_passes(
-                spark,
-                "threshold_sweep",
-                n_passes,
-                lambda k: hist_shard((k, n_passes)),
-            )
-            .groupBy("jaccard_bucket")
-            .agg(F.sum("n_pairs").alias("n_pairs"))
-        )
+        .withColumn("uni", F.col("n_a") + F.col("n_b") - F.col("inter"))
+        .select(F.expr("CAST((10 * inter) DIV uni AS INT)").alias("jaccard_bucket"))
+        .groupBy("jaccard_bucket")
+        .agg(F.count("*").alias("n_pairs"))
+    )
     w = Window.orderBy(F.col("jaccard_bucket").desc()).rowsBetween(
         Window.unboundedPreceding, 0
     )
@@ -704,53 +533,35 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch; both preserve this operator's output contract on the
     surviving candidates."""
     sh = _shingles_df(spark, sf_dir)
-
-    def shard(a_bucket: tuple[int, int] | None) -> DataFrame:
-        postings = sh.select(
-            "doc_id", F.size("hs").cast("long").alias("n"), F.explode("hs").alias("h")
+    postings = sh.select(
+        "doc_id", F.size("hs").cast("long").alias("n"), F.explode("hs").alias("h")
+    )
+    a = postings.select(F.col("doc_id").alias("a_id"), F.col("n").alias("n_a"), "h")
+    b = postings.select(F.col("doc_id").alias("b_id"), F.col("n").alias("n_b"), "h")
+    inter = (
+        a.join(b, "h")
+        .filter(F.col("a_id") < F.col("b_id"))
+        .groupBy("a_id", "b_id")
+        .agg(
+            F.count("*").alias("inter"),
+            F.min("n_a").alias("n_a"),
+            F.min("n_b").alias("n_b"),
         )
-        a_postings = (
-            postings.filter(_a_bucket_pred("doc_id", a_bucket))
-            if a_bucket is not None
-            else postings
+    )
+    m = F.least("n_a", "n_b")
+    return (
+        inter.filter(100 * F.col("inter") >= CONTAINMENT_THRESHOLD_PCT * m)
+        .select(
+            "a_id",
+            "b_id",
+            F.col("inter").cast("long").alias("inter"),
+            "n_a",
+            "n_b",
+            F.round(F.col("inter").cast("double") / m, 4).alias("containment"),
+            F.when(F.col("n_a") <= F.col("n_b"), F.lit("a_in_b"))
+            .otherwise(F.lit("b_in_a"))
+            .alias("direction"),
         )
-        a = a_postings.select(
-            F.col("doc_id").alias("a_id"), F.col("n").alias("n_a"), "h"
-        )
-        b = postings.select(
-            F.col("doc_id").alias("b_id"), F.col("n").alias("n_b"), "h"
-        )
-        inter = (
-            a.join(b, "h")
-            .filter(F.col("a_id") < F.col("b_id"))
-            .groupBy("a_id", "b_id")
-            .agg(
-                F.count("*").alias("inter"),
-                F.min("n_a").alias("n_a"),
-                F.min("n_b").alias("n_b"),
-            )
-        )
-        m = F.least("n_a", "n_b")
-        return (
-            inter.filter(100 * F.col("inter") >= CONTAINMENT_THRESHOLD_PCT * m)
-            .select(
-                "a_id",
-                "b_id",
-                F.col("inter").cast("long").alias("inter"),
-                "n_a",
-                "n_b",
-                F.round(F.col("inter").cast("double") / m, 4).alias("containment"),
-                F.when(F.col("n_a") <= F.col("n_b"), F.lit("a_in_b"))
-                .otherwise(F.lit("b_in_a"))
-                .alias("direction"),
-            )
-        )
-
-    n_passes = _n_pair_passes()
-    if n_passes == 1:
-        return shard(None)
-    return _run_pair_passes(
-        spark, "containment", n_passes, lambda k: shard((k, n_passes))
     )
 
 
@@ -1059,17 +870,6 @@ def dedup_embed_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
        tested in tests/test_llm_ops.py). The driver corpora sit far
        below the target, so the default path is single-block.
 
-    Bounded-spill campaign mode (SPARK_GRAFT_PAIR_PASSES=K > 1, r13):
-    the block-pair GROUP space is sharded by pair_id % K and each
-    shard runs as its own job (`_run_pair_passes`). The replication
-    shuffle (each vector rides to every admissible block-pair group
-    it belongs to) is the disk hazard at the third decade — at sf100
-    (2M vectors, quadratic candidate mass on the synthetic fixture)
-    the single-pass form overran a 51 GB disk (round-13 campaign);
-    per-pass volume is ~1/K. Outputs are disjoint and final (every
-    vector pair lands in exactly one pair_id), so no cross-pass merge;
-    pass-mode equality pytested.
-
     Oracle: the exact all-pairs threshold join — this plan must and
     does reproduce it bit-for-bit at the 4-decimal rounding."""
     return _embed_cosine_pairs(spark, sf_dir)
@@ -1194,38 +994,17 @@ def _embed_cosine_pairs(
             out = out[a_ids[ai] < b_ids[bi]]
         return out
 
-    def build_pass(shard: tuple[int, int] | None = None) -> DataFrame:
-        # shard the block-pair GROUP space: pair_id % K == k. Each
-        # vector is replicated only to this pass's groups, so the
-        # replication shuffle — the per-node-disk hazard at the third
-        # decade — is ~1/K per pass; every vector pair still lands in
-        # exactly one pair_id, so pass outputs are disjoint and final.
-        subset = (
-            admissible
-            if shard is None
-            else [t for t in admissible if t[0] % shard[1] == shard[0]]
-        )
-        pairs_df = spark.createDataFrame(
-            subset,
-            schema="pair_id int, member_list int, member_sub int, side string",
-        )
-        rep = sub_assigned.join(
-            F.broadcast(pairs_df),
-            (sub_assigned.list_id == pairs_df.member_list)
-            & (sub_assigned.sub_id == pairs_df.member_sub),
-        ).select("pair_id", "side", "vec_id", "embedding")
-        return rep.groupBy("pair_id").applyInPandas(
-            block_pairs, schema="a_id bigint, b_id bigint, cos_sim double"
-        )
-
-    n_passes = _n_pair_passes()
-    if n_passes == 1:
-        return build_pass()
-    return _run_pair_passes(
-        spark,
-        "embed_cosine",
-        n_passes,
-        lambda k: build_pass((k, n_passes)),
+    pairs_df = spark.createDataFrame(
+        admissible,
+        schema="pair_id int, member_list int, member_sub int, side string",
+    )
+    rep = sub_assigned.join(
+        F.broadcast(pairs_df),
+        (sub_assigned.list_id == pairs_df.member_list)
+        & (sub_assigned.sub_id == pairs_df.member_sub),
+    ).select("pair_id", "side", "vec_id", "embedding")
+    return rep.groupBy("pair_id").applyInPandas(
+        block_pairs, schema="a_id bigint, b_id bigint, cos_sim double"
     )
 
 
@@ -1412,8 +1191,11 @@ def connected_components(
     # pipeline — measured 3x the affinity build inside one
     # graph_connected_users run at sf0.1. Filled once by the probe job
     # below; released with `edges` at kernel exit (the returned labels
-    # are checkpoint-backed and never re-read it).
-    pairs = pairs.persist()
+    # are checkpoint-backed and never re-read it). A frame the caller
+    # already cached stays the caller's: neither persisted nor released.
+    owns_pairs = not pairs.is_cached
+    if owns_pairs:
+        pairs.persist()
     edges = (
         pairs.union(pairs.select(F.col("b_id").alias("a_id"), F.col("a_id").alias("b_id")))
         .withColumnsRenamed({"a_id": "u", "b_id": "v"})
@@ -1523,7 +1305,8 @@ def connected_components(
         if changed == 0:
             break
     edges.unpersist()
-    pairs.unpersist()
+    if owns_pairs:
+        pairs.unpersist()
     if has_hot:
         edges_hot.unpersist()
         edges_cold.unpersist()

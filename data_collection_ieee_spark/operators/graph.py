@@ -567,9 +567,7 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _triangle_core(
-    spark: SparkSession, edge_plan: DataFrame, label: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
+def _triangle_core(edge_plan: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Exact triangle counting core via degree-ordered orientation
     (Suri–Vassilvitskii / Cohen). Takes a lazy undirected (x < y) edge
     plan; returns (edges materialized, deg, 1-row triangle count).
@@ -577,27 +575,8 @@ def _triangle_core(
     Materialization is a tracked columnar persist (compressed in-memory
     columns, spill-to-disk), NOT localCheckpoint: checkpoint stores raw
     uncompressed row blocks — the device pagerank measured overrunning
-    a 76 GB disk at sf100 (ADVICE r10).
-
-    Bounded-pass mode (SPARK_GRAFT_PAIR_PASSES=K > 1, the same campaign
-    switch as the dedup shingle family): the oriented wedge space is
-    sharded by xxhash64(src) % K and each shard's wedge join + closing
-    semi-join runs as its OWN job with shuffle cleanup between
-    (dedup._run_pair_passes). Sharding on the wedge join key is
-    lossless — every wedge has exactly one src, so shard outputs are
-    final and the triangle total is the plain Σ of per-pass counts, no
-    cross-pass merge. Per-pass wedge mass is ~1/K of the Σ outdeg²
-    total, which is what bounds the per-pass shuffle spill; the cost is
-    re-scanning the (cached, columnar) orient/edge frames K times — a
-    linear term traded against the quadratic wedge spill, exactly the
-    shingle-family trade proven at sf100."""
-    # deliberate package-private reuse: the pass device and its
-    # PASS_STATS evidence channel live with the dedup campaign code
+    a 76 GB disk at sf100 (ADVICE r10)."""
     from data_collection_ieee_spark.catalog import persist_tracked
-    from data_collection_ieee_spark.operators.dedup import (
-        _n_pair_passes,
-        _run_pair_passes,
-    )
 
     edges = persist_tracked(edge_plan)
     edges.count()  # materialize once — reused 3x (orient, close, count)
@@ -622,59 +601,33 @@ def _triangle_core(
     )
     orient.count()  # materialize once — reused as both wedge legs
 
-    def _pass_count(shard) -> DataFrame:
-        o1 = orient.filter(shard).select("src", F.col("dst").alias("d1"))
-        o2 = orient.filter(shard).select("src", F.col("dst").alias("d2"))
-        # d1 < d2 is enforced by the wedge filter, so the canonical
-        # closing edge is exactly (d1, d2) — spelling it
-        # least/greatest would be redundant AND hides the equi-keys
-        # from Catalyst (planned as a nested-loop join; plan_audit
-        # CARTESIAN flag, round 10)
-        wedges = o1.join(o2, "src").filter(F.col("d1") < F.col("d2"))
-        # OPTIMIZATION r13 (guide §3.1): the closing join probes the
-        # Θ(E^1.5) wedge stream against the |E|-row edge set — a
-        # sort-merge join SORTS the whole wedge stream (41M rows at
-        # sf0.1) just to discard non-matches. SHUFFLE_HASH on the edge
-        # side builds a per-partition hash table from the SMALL side
-        # and streams the wedges through unsorted: measured 11.75 s →
-        # 2.79 s (median, interleaved A/B) for the closing phase, same
-        # count. At scale the build side per partition is |E|/shuffle
-        # partitions (uniform (x,y) hash keys; AQE skew-split remains
-        # available), exactly the guide's shuffled-hash criterion.
-        return (
-            wedges.join(
-                edges.hint("shuffle_hash"),
-                (edges.x == F.col("d1")) & (edges.y == F.col("d2")),
-                "left_semi",
-            )
-            .groupBy()
-            .agg(F.count("*").cast("long").alias("t"))
+    o1 = orient.select("src", F.col("dst").alias("d1"))
+    o2 = orient.select("src", F.col("dst").alias("d2"))
+    # d1 < d2 is enforced by the wedge filter, so the canonical
+    # closing edge is exactly (d1, d2) — spelling it
+    # least/greatest would be redundant AND hides the equi-keys
+    # from Catalyst (planned as a nested-loop join; plan_audit
+    # CARTESIAN flag, round 10)
+    wedges = o1.join(o2, "src").filter(F.col("d1") < F.col("d2"))
+    # OPTIMIZATION r13 (guide §3.1): the closing join probes the
+    # Θ(E^1.5) wedge stream against the |E|-row edge set — a
+    # sort-merge join SORTS the whole wedge stream (41M rows at
+    # sf0.1) just to discard non-matches. SHUFFLE_HASH on the edge
+    # side builds a per-partition hash table from the SMALL side
+    # and streams the wedges through unsorted: measured 11.75 s →
+    # 2.79 s (median, interleaved A/B) for the closing phase, same
+    # count. At scale the build side per partition is |E|/shuffle
+    # partitions (uniform (x,y) hash keys; AQE skew-split remains
+    # available), exactly the guide's shuffled-hash criterion.
+    tri = (
+        wedges.join(
+            edges.hint("shuffle_hash"),
+            (edges.x == F.col("d1")) & (edges.y == F.col("d2")),
+            "left_semi",
         )
-
-    n_passes = _n_pair_passes()
-    if n_passes == 1:
-        tri = _pass_count(F.lit(True))
-    else:
-        # Consume the pass union EAGERLY: the lazy read points at
-        # _run_pair_passes' scratch dir, which the NEXT same-label run
-        # rmtree's at start — a caller holding an unconsumed lazy `tri`
-        # across a re-run would read under a deleted dir (ADVICE r11).
-        # The sum is one row, so materializing here is free.
-        total = (
-            _run_pair_passes(
-                spark,
-                label,
-                n_passes,
-                lambda k: _pass_count(
-                    F.pmod(F.xxhash64(F.col("src")), F.lit(n_passes))
-                    == F.lit(k)
-                ),
-            )
-            .groupBy()
-            .agg(F.sum("t").cast("long").alias("t"))
-            .collect()[0]["t"]
-        )
-        tri = spark.createDataFrame([(int(total or 0),)], "t long")
+        .groupBy()
+        .agg(F.count("*").cast("long").alias("t"))
+    )
     return edges, deg, tri
 
 
@@ -739,9 +692,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-joins AQE can re-plan; degrees and the final 4 scalars are
     the only sub-edge-scale frames. Clustering = 3·triangles / wedges
     with the wedge sum Σ C(d,2) in exact integer arithmetic."""
-    edges, deg, tri = _triangle_core(
-        spark, _copurchase_edges(spark, sf_dir), "triangle_count"
-    )
+    edges, deg, tri = _triangle_core(_copurchase_edges(spark, sf_dir))
     n_nodes = deg.groupBy().agg(F.count("*").alias("n_nodes"))
     n_edges = edges.groupBy().agg(F.count("*").alias("n_edges"))
     wedge_mass = deg.groupBy().agg(
@@ -834,9 +785,7 @@ def graph_triangle_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     so at p = 1/2 the quadratic term shrinks ~4× while the estimator's
     relative standard error stays O(1/√T) for triangle-rich graphs
     (DOULION Thm 2: Var(T̂) ≤ T(1/p³ − 1) + 2Δ_shared/p — negligible
-    when T is in the 1e5+ range this graph has even at sf0.01). Both
-    devices compose: SPARK_GRAFT_PAIR_PASSES shards the (already
-    sparsified) wedge space into bounded passes.
+    when T is in the 1e5+ range this graph has even at sf0.01).
 
     The edge coin is md5-derived and DETERMINISTIC (not Bernoulli
     rand()): reproducible across runs/cluster layouts, and the DuckDB
@@ -847,7 +796,7 @@ def graph_triangle_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampled = _copurchase_edges(spark, sf_dir).filter(
         _edge_coin_spark() < _DOULION_PCT
     )
-    edges, _deg, tri = _triangle_core(spark, sampled, "triangle_sample")
+    edges, _deg, tri = _triangle_core(sampled)
     n_edges = edges.groupBy().agg(F.count("*").alias("n_sampled_edges"))
     return n_edges.crossJoin(F.broadcast(tri)).select(
         "n_sampled_edges",
@@ -1011,25 +960,7 @@ def _affinity_edge_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     `_SHARED_PARTS_MIN` distinct purchased parts. The hot-part-safe
     pair build (`_affinity_pairs`) feeds one pair-count aggregate with
     map-side combine. Shared by `graph_connected_users` and
-    `graph_label_propagation`.
-
-    Bounded-spill campaign mode (SPARK_GRAFT_PAIR_PASSES=K > 1, r13):
-    the co-purchase pair mass is Σ C(buyers_p, 2) ≈ 9B rows at sf100
-    (~140 GB of aggregate shuffle — the round-13 campaign's LPA run
-    overran the disk on exactly this frame). Pairs shard by
-    xxhash64(a_id) % K — the pair's SMALLER customer id, so every
-    (a, b) pair's full per-part multiplicity lands in exactly one
-    shard and the shared-parts count never needs a cross-pass merge.
-    The filter sits between the in-row/bucket-pair explodes and the
-    groupBy, so Catalyst applies it before the aggregate exchange:
-    per-pass shuffle ~1/K, at the price of re-running the linear cp
-    build + explode per pass (the ngram-postings trade). Equality
-    pytested at K=3 (tests/test_round13_ops.py)."""
-    from data_collection_ieee_spark.operators.dedup import (
-        _n_pair_passes,
-        _run_pair_passes,
-    )
-
+    `graph_label_propagation`."""
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
@@ -1041,27 +972,12 @@ def _affinity_edge_list(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
         .distinct()
     )
-
-    def edges_for(pairs: DataFrame) -> DataFrame:
-        return (
-            pairs.groupBy("a_id", "b_id")
-            .agg(F.count("*").alias("shared"))
-            .filter(F.col("shared") >= _SHARED_PARTS_MIN)
-            .select("a_id", "b_id")
-        )
-
-    n_passes = _n_pair_passes()
-    if n_passes == 1:
-        return edges_for(_affinity_pairs(cp))
-    return _run_pair_passes(
-        spark,
-        "affinity_edges",
-        n_passes,
-        lambda k: edges_for(
-            _affinity_pairs(cp).filter(
-                F.pmod(F.xxhash64("a_id"), F.lit(n_passes)) == k
-            )
-        ),
+    return (
+        _affinity_pairs(cp)
+        .groupBy("a_id", "b_id")
+        .agg(F.count("*").alias("shared"))
+        .filter(F.col("shared") >= _SHARED_PARTS_MIN)
+        .select("a_id", "b_id")
     )
 
 

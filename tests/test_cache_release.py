@@ -9,6 +9,8 @@ second campaign starts from zero executor storage.
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 import pytest
 
 from data_collection_ieee_spark import catalog
@@ -78,6 +80,52 @@ def test_cc_checkpoints_released(spark):
 
     catalog.release_caches()
     assert _n_persistent(spark) == base
+
+
+def test_cc_keeps_a_pairs_cache_the_caller_holds(spark):
+    """connected_components persists an uncached `pairs` frame for its
+    own reads and releases it at exit; a frame the caller already
+    cached stays cached, and the labels do not depend on which."""
+    catalog.release_caches()
+    edges = [(i, i + 1) for i in range(10)] + [(20, 21)]
+    schema = "a_id bigint, b_id bigint"
+    nodes = spark.createDataFrame([(i,) for i in range(22)], "doc_id bigint")
+
+    fresh = spark.createDataFrame(edges, schema)
+    want = sorted(dedup.connected_components(spark, fresh, nodes).collect())
+    assert not fresh.is_cached
+
+    held = spark.createDataFrame(edges, schema).persist()
+    got = sorted(dedup.connected_components(spark, held, nodes).collect())
+    assert held.is_cached
+    assert got == want
+    held.unpersist()
+    catalog.release_caches()
+
+
+class _StandInSession:
+    """Just the surface load_table touches: read.parquet and conf.set."""
+
+    def __init__(self):
+        self.read = SimpleNamespace(parquet=lambda path: ("plan", path))
+        self.conf = SimpleNamespace(set=lambda key, value: None)
+
+
+def test_table_memo_holds_one_session(monkeypatch):
+    """The reader-plan memo keeps only the current session's plans: the
+    first load under a new session drops every entry of the previous
+    one, so a stopped session is not pinned for the process lifetime."""
+    monkeypatch.setattr(catalog, "normalize_events_ts", lambda df: df)
+    monkeypatch.setattr(catalog, "_TABLE_CACHE", {})
+    first, second = _StandInSession(), _StandInSession()
+
+    plan = catalog.load_table(first, "/sf", "region")
+    catalog.load_table(first, "/sf", "events")
+    assert catalog.load_table(first, "/sf", "region") is plan  # memo hit
+    assert {k[0] for k in catalog._TABLE_CACHE} == {first}
+
+    catalog.load_table(second, "/sf", "region")
+    assert {k[0] for k in catalog._TABLE_CACHE} == {second}
 
 
 def test_eager_checkpoint_free_actually_drops_blocks(spark):

@@ -627,32 +627,6 @@ def test_threshold_sweep_consistent_with_jaccard_pairs(spark, sf_dir):
     assert total == max(r["n_pairs_at_or_above"] for r in rows.values())
 
 
-def test_pair_passes_equal_single_pass(spark, sf_dir, monkeypatch):
-    """Bounded-spill campaign mode (SPARK_GRAFT_PAIR_PASSES=K): the
-    K-shard pair decomposition must return EXACTLY the single-pass
-    rows for every sharded operator — pairs are partitioned by the
-    smaller doc's id hash, so each lands in precisely one pass and the
-    union is the whole answer. K=3 exercises uneven shards and at
-    least one pass whose output is a strict subset."""
-    from data_collection_ieee_spark.operators import dedup
-
-    names = ["dedup_ngram_jaccard", "dedup_containment", "dedup_threshold_sweep"]
-    single = {n: {tuple(r) for r in _rows(n, spark, sf_dir)} for n in names}
-    monkeypatch.setenv("SPARK_GRAFT_PAIR_PASSES", "3")
-    for n in names:
-        sharded = {tuple(r) for r in _rows(n, spark, sf_dir)}
-        assert sharded == single[n], n
-    # the pass harness recorded per-pass stats for the trend runner
-    assert len(dedup.PASS_STATS["ngram_jaccard"]) == 3
-    assert all(s["wall_s"] > 0 for s in dedup.PASS_STATS["ngram_jaccard"])
-    # and the shards were genuinely non-trivial: no single pass carried
-    # every pair of the jaccard output
-    total = len(single["dedup_ngram_jaccard"])
-    if total >= 3:
-        per_pass = [s["scratch_bytes"] for s in dedup.PASS_STATS["ngram_jaccard"]]
-        assert sum(1 for b in per_pass if b > 0) >= 2
-
-
 def test_containment_matches_bruteforce(spark, sf_dir, duck):
     """Independent implementation: Python string-trigram sets over the
     raw parquet, exact containment, same integer predicate — must

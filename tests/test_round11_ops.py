@@ -1,11 +1,6 @@
-"""Round-11 additions: triangle-count bounded-pass equality (the
-VERDICT r10 #1 device), DOULION-style sampled triangle estimate, and
-the connected-users CC consumer view.
-
-The pass-mode test is the graph twin of the shingle-family campaign
-equality test (test_llm_ops.py): K sharded wedge passes must produce
-byte-identical output to the single-pass plan, because sharding on the
-wedge join key (src) is lossless by construction.
+"""Round-11 additions: the exact triangle count on a motif fixture,
+the DOULION-style sampled triangle estimate, and the connected-users
+CC consumer view.
 """
 
 from __future__ import annotations
@@ -14,7 +9,6 @@ import pandas as pd
 import pytest
 
 from data_collection_ieee_spark.catalog import release_caches
-from data_collection_ieee_spark.operators import dedup
 from data_collection_ieee_spark.operators.graph import graph_triangle_count
 
 SF001 = "/root/testdata/sf0.001"
@@ -29,10 +23,9 @@ def _write_baskets(tmp_path, baskets):
     pd.DataFrame(rows).to_parquet(tmp_path / "lineitem.parquet")
 
 
-def test_triangle_pass_mode_equals_single_pass(spark, tmp_path, monkeypatch):
-    """K=3 sharded wedge passes == single-pass, on a motif fixture with
-    triangles spread across src shards (3 disjoint triangles + one K4
-    = 3 + 4 triangles), plus pass_stats evidence recorded."""
+def test_triangle_count_motif_fixture(spark, tmp_path):
+    """Exact triangle count on a motif fixture: 3 disjoint triangles +
+    one K4 = 3 + 4 triangles."""
     _write_baskets(
         tmp_path,
         [
@@ -42,28 +35,9 @@ def test_triangle_pass_mode_equals_single_pass(spark, tmp_path, monkeypatch):
             (4, [31, 32, 33, 34]),  # K4: C(4,3) = 4 triangles
         ],
     )
-    single = graph_triangle_count(spark, str(tmp_path)).collect()
+    rows = graph_triangle_count(spark, str(tmp_path)).collect()
     release_caches()
-    monkeypatch.setenv(dedup.PAIR_PASSES_ENV, "3")
-    passed = graph_triangle_count(spark, str(tmp_path)).collect()
-    release_caches()
-    assert single == passed
-    assert single[0]["n_triangles"] == 7
-    stats = dedup.PASS_STATS["triangle_count"]
-    assert len(stats) == 3
-    assert all(s["wall_s"] > 0 for s in stats)
-
-
-def test_triangle_pass_mode_equals_single_pass_sf001(spark, monkeypatch):
-    """Same equality on the real fixture (denser graph, every shard
-    non-trivial)."""
-    single = graph_triangle_count(spark, SF001).collect()
-    release_caches()
-    monkeypatch.setenv(dedup.PAIR_PASSES_ENV, "4")
-    passed = graph_triangle_count(spark, SF001).collect()
-    release_caches()
-    assert single == passed
-    assert single[0]["n_triangles"] > 0
+    assert rows[0]["n_triangles"] == 7
 
 
 def test_triangle_sample_p100_equals_exact(spark, tmp_path, monkeypatch):

@@ -87,58 +87,6 @@ def test_knn_join_ann_recall_monotone_in_probes(spark, sf_dir, exact_knn):
     assert r_full == pytest.approx(1.0)
 
 
-def test_embed_cosine_pair_passes_equal_single_pass(spark, sf_dir, monkeypatch):
-    """Round-13 campaign closure: dedup_embed_cosine's single-pass
-    replication shuffle overran the disk at sf100, so it now honors
-    SPARK_GRAFT_PAIR_PASSES by sharding the block-pair group space
-    (pair_id % K). Every vector pair lands in exactly one pair_id, so
-    the K-pass union must equal the single-pass rows exactly. K=3 at
-    block_target=8 forces many sub-blocked groups and at least one
-    shard whose output is a strict subset."""
-    from data_collection_ieee_spark.operators import dedup
-
-    single = {
-        tuple(r)
-        for r in dedup._embed_cosine_pairs(spark, sf_dir, block_target=8).collect()
-    }
-    monkeypatch.setenv("SPARK_GRAFT_PAIR_PASSES", "3")
-    sharded = {
-        tuple(r)
-        for r in dedup._embed_cosine_pairs(spark, sf_dir, block_target=8).collect()
-    }
-    assert sharded == single
-    assert len(dedup.PASS_STATS["embed_cosine"]) == 3
-    assert all(s["wall_s"] > 0 for s in dedup.PASS_STATS["embed_cosine"])
-
-
-def test_affinity_edges_pair_passes_equal_single_pass(spark, sf_dir, monkeypatch):
-    """The affinity pair frame (shared by graph_connected_users and
-    graph_label_propagation) now honors SPARK_GRAFT_PAIR_PASSES,
-    sharding pairs by xxhash64(a_id) % K so the shared-parts count is
-    complete within one shard. K-pass union must equal single-pass
-    exactly, and the downstream LPA communities must be identical."""
-    from data_collection_ieee_spark.operators import dedup, graph
-
-    single = {
-        tuple(r) for r in graph._affinity_edge_list(spark, sf_dir).collect()
-    }
-    lpa_single = {
-        tuple(r)
-        for r in graph.graph_label_propagation(spark, sf_dir).collect()
-    }
-    monkeypatch.setenv(dedup.PAIR_PASSES_ENV, "3")
-    sharded = {
-        tuple(r) for r in graph._affinity_edge_list(spark, sf_dir).collect()
-    }
-    assert sharded == single
-    assert len(dedup.PASS_STATS["affinity_edges"]) == 3
-    lpa_sharded = {
-        tuple(r)
-        for r in graph.graph_label_propagation(spark, sf_dir).collect()
-    }
-    assert lpa_sharded == lpa_single
-
-
 def _pack_reference(spark, sf_dir):
     """Driver-side reference pack: per source, admit docs in
     (md5(doc_id), doc_id) order until the target is covered."""

@@ -146,27 +146,12 @@ def main() -> int:
         "driver_memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
         "queries": {},
     }
-    n_passes = os.environ.get("SPARK_GRAFT_PAIR_PASSES")
-    if n_passes and int(n_passes) > 1:
-        out["pair_passes"] = int(n_passes)
-    from data_collection_ieee_spark.operators import dedup as _dedup
 
     worst = 0.0
     for name in names:
         t1, tn = results[name][args.base], results[name][args.big]
         ratio = tn / t1 if t1 > 0 else float("inf")
         out["queries"][name] = {"base_s": t1, "big_s": tn, "ratio": round(ratio, 2)}
-        # bounded-spill campaign evidence: pass count + per-pass wall and
-        # local-dir (shuffle/spill) bytes from the last (big) run
-        label_key = {
-            "dedup_ngram_jaccard": "ngram_jaccard",
-            "dedup_containment": "containment",
-            "dedup_threshold_sweep": "threshold_sweep",
-            "graph_triangle_count": "triangle_count",
-            "graph_triangle_sample": "triangle_sample",
-        }.get(name)
-        if label_key and label_key in _dedup.PASS_STATS:
-            out["queries"][name]["pass_stats"] = _dedup.PASS_STATS[label_key]
         worst = max(worst, ratio)
         flag = "" if ratio <= factor * 1.3 else "  <-- SUPERLINEAR"
         print(f"{name:26} {t1:8.3f} {tn:8.3f} {ratio:6.2f}x{flag}")
@@ -211,8 +196,6 @@ def main() -> int:
                 {"prev": old_env, "queries_before_rerun": sorted(stored["queries"])}
             )
         stored.update(env)
-        if "pair_passes" in out:  # campaign runs must keep their K visible
-            stored["pair_passes"] = out["pair_passes"]
         stored["queries"].update(out["queries"])
     else:
         trend["decades"][label] = out
